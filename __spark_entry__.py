@@ -18,10 +18,14 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from financial_transaction_data_warehouse_interactive_dashboard_spark.plans import (  # noqa: E402
     queries as _q,
+)
+from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.rotation import (  # noqa: E402
+    driver_surface,
 )
 
 
@@ -31,12 +35,19 @@ def entry(spark: SparkSession) -> DataFrame:
     return _q.REGISTRY["q1_top_segments"].spark(spark, "/root/testdata/sf0.001")
 
 
+def _surface() -> list[_q.NamedQuery]:
+    """The registry entries whose driver evidence is missing or oldest,
+    ranked against the CORRECTNESS_r*.json files committed next to this
+    file."""
+    return [_q.REGISTRY[n] for n in driver_surface(_q.REGISTRY, _HERE)]
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md section 2."""
-    return _q.spark_queries()
+    """The driver surface: SURFACE_SIZE registry entries."""
+    return {q.name: q.spark for q in _surface()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twin for each query (omitted for
     non-SQL-expressible ops -> driver records a rows-only check)."""
-    return _q.oracle_queries()
+    return {q.name: q.oracle for q in _surface() if q.oracle is not None}

@@ -46,7 +46,6 @@ from .queries import _t, query
     GROUP BY md5(text)
     ORDER BY doc_id
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def dd_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup via content-hash groupBy (operators.dedup.exact_dedup)."""
@@ -75,7 +74,6 @@ def dd_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE round(common::DOUBLE / (sa.sz + sb.sz - common), 6) >= 0.3
     ORDER BY id_a, id_b
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exhaustive word-5-gram Jaccard near-dup pairs (shared-shingle block).
@@ -117,7 +115,6 @@ def dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE {SQL_JACCARD} >= 0.3
     ORDER BY id_a, id_b
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def dd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16) + LSH(8 bands x 2) candidates, exact-Jaccard verified.
@@ -139,7 +136,6 @@ def dd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {SQL_SIMHASH}
     SELECT doc_id, simhash FROM simh ORDER BY doc_id
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def dd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document (operators.dedup.simhash)."""
@@ -161,9 +157,6 @@ def dd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
     ORDER BY id_a, id_b
     """,
-    # Demoted r5 (rotation: family already multiply driver-green; stays
-    # pinned by the local oracle sweep).
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def dd_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (Hamming <= 3), 8-bit-chunk blocked —
@@ -185,7 +178,6 @@ def dd_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.4
     ORDER BY id_a, id_b
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def dd_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, label-blocked."""
@@ -206,7 +198,6 @@ def dd_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.4
     ORDER BY id_a, id_b
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def dd_embedding_neardup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk-pair (cogrouped GEMM tile) variant — MUST emit exactly the
@@ -256,7 +247,6 @@ def dd_embedding_neardup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT n AS doc_id, CAST(min(m) AS BIGINT) AS component
     FROM reach GROUP BY n ORDER BY doc_id
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def dd_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE dedup clusters: connected components over the MinHash-LSH
@@ -282,7 +272,6 @@ def dd_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dd_corpus_clean",
     _SQL_CORPUS_CLEAN,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def dd_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship LLM-training-data pipeline, end to end: language
@@ -355,8 +344,6 @@ def dd_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT min(doc_id) AS doc_id, count(*) AS n_copies
     FROM h GROUP BY h.h ORDER BY doc_id
     """,
-    # New r5 batch (locally pinned; r6 driver-rotation candidate).
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def dd_normalized_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4/CCNet-style normalization dedup (operators.dedup.
@@ -410,7 +397,6 @@ def dd_normalized_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE h NOT IN (SELECT h FROM ch)
     ORDER BY doc_id
     """,
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def dd_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental exact dedup (operators.dedup.incremental_dedup):
@@ -470,7 +456,6 @@ def dd_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE {SQL_JACCARD} >= 0.3
     ORDER BY id_a, id_b
     """,
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def dd_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental NEAR-dedup (operators.dedup.incremental_minhash_lsh):
@@ -514,7 +499,6 @@ def dd_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ph JOIN df USING (h)
     GROUP BY doc_id ORDER BY doc_id
     """,
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def dd_passage_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicated-passage report (operators.dedup.passage_dup_report):
@@ -562,7 +546,6 @@ def dd_passage_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
                                ORDER BY seg_idx), '') AS clean_text
     FROM k GROUP BY doc_id ORDER BY doc_id
     """,
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def dd_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4's line-level dedup (Raffel et al. 2020 §2.2 — drop every
@@ -595,7 +578,6 @@ def dd_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE levenshtein(a.name, b.name) <= {ER_MAX_DIST}
     ORDER BY 1, 2, 3
     """,
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def dd_er_blocked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity-resolution candidate pairs over the part-name vocabulary:
@@ -637,7 +619,6 @@ def dd_er_blocked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cand WHERE levenshtein(s_a, s_b) <= {EDJ_K}
     ORDER BY s_a, s_b
     """,
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def dd_qgram_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide edit-distance similarity JOIN (all pairs of distinct
@@ -743,7 +724,6 @@ def dd_qgram_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE round(common::DOUBLE / least(sa.sz, sb.sz), 6) >= 0.8
     ORDER BY id_a, id_b
     """,
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def dd_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by shingle CONTAINMENT >= 0.8 — |A n B| over the
@@ -783,7 +763,6 @@ def dd_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ex JOIN fo ON ex.s = fo.s
     GROUP BY 1 ORDER BY 1
     """,
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def dd_novelty_fractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marginal-novelty curve per document: what fraction of each doc's

@@ -35,10 +35,6 @@ from .queries import _t, query
           FROM documents)
     ORDER BY doc_id
     """,
-    # Promoted r5 into the driver surface: the decode stage now parses a
-    # REAL format (BMP header round-trip) instead of the md5 stand-in,
-    # which mm_features_resize still pins driver-side.
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def mm_blob_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal decode pipeline over a REAL format: per document a
@@ -72,7 +68,6 @@ def mm_blob_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM documents)
     ORDER BY doc_id
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def mm_features_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal decode + feature-extraction + resize-planning in one
@@ -122,10 +117,6 @@ def mm_features_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM documents)
     ORDER BY doc_id, frame_idx
     """,
-    # Demoted r4 to fund sk_salted_hot_join under the 50-row driver cap:
-    # sibling of mm_features_resize (same Arrow mapInPandas multimodal
-    # plumbing, driver-green r3); locally oracle-pinned.
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling over binary payloads (every 2nd 64-byte frame) —
@@ -166,8 +157,6 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                          THEN 1 ELSE 0 END) AS BIGINT) AS zero_crossings
     FROM x GROUP BY doc_id ORDER BY doc_id
     """,
-    # Promoted r6 (rotation: first driver row for the decoder tier).
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def mm_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real audio feature extraction end-to-end (operators.multimodal.
@@ -203,8 +192,6 @@ def mm_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(min(doc_id) % 256 AS BIGINT) AS top_left
     FROM p GROUP BY doc_id ORDER BY doc_id
     """,
-    # New r5 (locally pinned; r6 rotation candidate for the mm family).
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def mm_bmp_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real image payload decode end-to-end (operators.multimodal.
@@ -244,8 +231,6 @@ def mm_bmp_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST((min(doc_id) + 7 * f) % 256 AS BIGINT) AS top_left
     FROM p GROUP BY doc_id, f ORDER BY doc_id, frame_idx
     """,
-    # New r5 (locally pinned; r6 rotation candidate for the mm family).
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def mm_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real video container parsing end-to-end (operators.multimodal.
@@ -293,10 +278,6 @@ def mm_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM hash GROUP BY 1, 2 HAVING count(*) >= 2
     ORDER BY ahash_hi, ahash_lo
     """,
-    # New r9 (image near-dup, completing the multimodal triple's dedup
-    # story); promoted from NEXT_QUEUE in the r10 rotation after
-    # all-scale pre-validation.
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def mm_ahash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IMAGE near-duplicate detection by perceptual average hash
@@ -406,9 +387,6 @@ _AHASH_TWIN_OFFSET = 1_000_000
            CAST(min(hamming) AS INTEGER) AS min_hamming
     FROM sides GROUP BY 1 ORDER BY doc_id
     """,
-    # New r10 (VERDICT r9 ask #4); first-timer on the r10 surface after
-    # all-three-scale pre-validation (plans/rotation.py).
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def mm_ahash_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image NEAR-dup detection by Hamming ball over the perceptual

@@ -202,7 +202,6 @@ def _sql_dedup_before_index() -> str:
 @query(
     "pl_dedup_before_index",
     _sql_dedup_before_index(),
-    driver=True,  # first driver row r16 (promoted from NEXT_QUEUE; plans/rotation.py)
 )
 def pl_dedup_before_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-BEFORE-index, the real pipeline order, fused end to end
@@ -345,7 +344,6 @@ def hybrid_rerank_stage(
 @query(
     "pl_hybrid_rerank",
     _sql_hybrid_rerank(),
-    driver=True,  # first driver row r16 (promoted from NEXT_QUEUE; plans/rotation.py)
 )
 def pl_hybrid_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid reranker stage composed ONTO the canonical ANN shortlist
@@ -390,7 +388,6 @@ def pl_hybrid_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch run row-for-row — stream == batch is the checked contract
     # (the st_ivfpq256_serve discipline, on the CANONICAL index).
     _sql_dedup_before_index(),
-    driver=True,  # first driver row r16 (promoted from NEXT_QUEUE; plans/rotation.py)
 )
 def st_canonical_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fused pipeline's streaming closure: queries served AT INGEST
@@ -428,7 +425,6 @@ def st_canonical_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted canonical index must answer exactly like the in-memory
     # fused pipeline.
     _sql_dedup_before_index(),
-    driver=True,  # first row r16 + keep-set seat (canonical-publish admission; plans/rotation.py)
 )
 def wh_canonical_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PUBLISH-then-SERVE the CANONICAL (dedup-before-index) index —
@@ -574,7 +570,6 @@ def _shared_canon_appended_prefix(spark: SparkSession, sf_dir: str) -> str:
 @query(
     "pl_incremental_curate",
     _sql_incremental_curate(),
-    driver=True,  # first driver row r16 (promoted from NEXT_QUEUE; plans/rotation.py)
 )
 def pl_incremental_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INCREMENTAL production loop, fused: a new document batch
@@ -729,7 +724,6 @@ def _sql_retrain_on_drift() -> str:
 @query(
     "pl_retrain_on_drift",
     _sql_retrain_on_drift(),
-    driver=False,  # authored r16 post-flip; queued in NEXT_QUEUE for r17
 )
 def pl_retrain_on_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RETRAIN-ON-DRIFT for the CANONICAL index — the one lifecycle
@@ -1052,7 +1046,6 @@ def weighted_rerank_stage(
 @query(
     "pl_learned_rerank",
     _sql_learned_rerank(),
-    driver=False,  # authored r16 post-flip; queued in NEXT_QUEUE for r17
 )
 def pl_learned_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The rerank slot upgraded from unweighted jaccard to a LEARNED

@@ -275,8 +275,6 @@ def _shared_appended256_prefix(spark: SparkSession, sf_dir: str) -> str:
                                ORDER BY rrf DESC, doc_id ASC) <= 10
     ORDER BY query_id, rrf DESC, doc_id
     """,
-    # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
 )
 def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HYBRID retrieval with reciprocal-rank fusion — the modern search
@@ -385,7 +383,6 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) <= 10
     ORDER BY query_id, cosine DESC, neighbor_id
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 for the first 8 vectors.
@@ -420,7 +417,6 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) <= 5
     ORDER BY query_id, cosine DESC, neighbor_id
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def sim_ann_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 within the query's sign-LSH bucket (the scale path)."""
@@ -470,8 +466,6 @@ def sim_ann_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM qs LEFT JOIN na USING (query_id) LEFT JOIN h USING (query_id)
     ORDER BY query_id
     """,
-    # New r6 (locally pinned; future rotation candidate).
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def sim_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN QUALITY measurement — recall@5 of the sign-LSH bucket path
@@ -548,7 +542,6 @@ def sim_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) <= 5
     ORDER BY query_id, cosine DESC, neighbor_id
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN (coarse cells + nprobe probing) — the oracle reproduces the
@@ -564,8 +557,6 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sim_ann_pq_adc",
     _sql_pq_adc(),
-    # New r6 (locally pinned; r7 rotation candidate).
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def sim_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization + asymmetric distance (operators.similarity
@@ -585,7 +576,6 @@ def sim_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sim_ann_ivf_kmeans",
     _sql_ivf_kmeans(1),
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def sim_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with a k-means-refined quantizer (one Lloyd iteration, decimal-
@@ -600,7 +590,7 @@ def sim_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@query("sim_ann_ivf_kmeans_iter3", _sql_ivf_kmeans(3), driver=False)  # demoted r14 (rotation; driver-green, plans/rotation.py)
+@query("sim_ann_ivf_kmeans_iter3", _sql_ivf_kmeans(3))
 def sim_ann_ivf_kmeans_iter3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-iteration Lloyd refinement (3 iterations, each materialized
     once and decimal-exact): the converged-quantizer path. The oracle SQL
@@ -753,10 +743,6 @@ def _ivfpq_recall_output(
 @query(
     "sim_ann_ivf_pq",
     _sql_ivf_pq(),
-    # New r9 — the LLM-pipeline capstone (VERDICT r8 ask #5); flipped
-    # onto the driver surface in the r9 rotation commit after both-scale
-    # pre-validation (plans/rotation.py).
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
 )
 def sim_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The capstone vector-index composition — FAISS-style IVFPQ
@@ -794,16 +780,11 @@ def sim_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
+# Defined here (not beyond_warehouse) to share _sql_ivf_pq and the recall
+# composition.
 @query(
     "wh_ivfpq_publish",
     _sql_ivf_pq(),
-    # New r9 — the stored form of the IVFPQ capstone (shares its oracle
-    # VERBATIM: the persisted index must answer exactly like the
-    # in-memory one). First driver row r10; joins the standing keep-set
-    # from r11 as a wh_* lifecycle harness (snapshot/state-dependent,
-    # the r8 second-row policy). Defined here (not beyond_warehouse) to
-    # share _sql_ivf_pq and the recall composition.
-    driver=False,  # aged out of keep-set r14 (cap policy; driver-green, plans/rotation.py)
 )
 def wh_ivfpq_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PUBLISH-then-SERVE the IVFPQ index (sources.warehouse.
@@ -962,10 +943,6 @@ def _sql_ivfpq_append(base: int = IVFPQ_APPEND_BASE) -> str:
 @query(
     "wh_ivfpq_append",
     _sql_ivfpq_append(),
-    # New r10 (index-freshness capstone, authored after the r10 flip);
-    # heads the r11 NEXT_QUEUE — locally oracle-pinned at all three
-    # scales meanwhile.
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def wh_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL index maintenance (sources.warehouse.
@@ -1223,10 +1200,6 @@ def _sql_ivfadc_residual(
 @query(
     "sim_ann_ivfadc_residual",
     _sql_ivfadc_residual(raw_leg=False),
-    # New r10; single-pipeline since r11 (VERDICT r10 ask #3) — the
-    # implementation and oracle changed, so the entry is RE_PROMOTED
-    # for a fresh driver row (plans/rotation.py).
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def sim_ann_ivfadc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC with RESIDUAL encoding — the fidelity step Jegou et al.'s
@@ -1301,8 +1274,6 @@ def sim_ann_ivfadc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
               for x in v], ',') AS codes_csv
     FROM s ORDER BY vec_id
     """,
-    # Promoted r5 into the driver surface (rotation: first driver row).
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def sim_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """int8 embedding quantization (operators.similarity.quantize_int8):
@@ -1391,9 +1362,6 @@ _NDCG_DISC_SQL = " ".join(
     JOIN idcg ON idcg.query_id = qs.query_id
     ORDER BY qs.query_id
     """.replace("{SIGN_BITS}", str(S.SIGN_BITS)),
-    # New r8 (locally pinned; backlog — rotation candidate with
-    # wh_compaction once the r9 queue clears).
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
 )
 def sim_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graded RANKING quality of the ANN path — NDCG@5 of sign-LSH
@@ -1523,10 +1491,6 @@ IVFPQ_DRIFT_TRAIN = S.IVFPQ_DRIFT_TRAIN
              AS drifted
     FROM g ORDER BY cohort
     """,
-    # New r10 (index-lifecycle monitor, authored after the r10 flip);
-    # joins the r11 NEXT_QUEUE — locally oracle-pinned at all three
-    # scales.
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def sim_ivfpq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RETRAIN-trigger monitor that closes the index lifecycle
@@ -1704,9 +1668,6 @@ def _sql_ivfpq_retrain(
 @query(
     "wh_ivfpq_retrain",
     _sql_ivfpq_retrain(),
-    # New r11 (VERDICT r10 ask #4); first-timer on the r11 surface
-    # after all-three-scale pre-validation (plans/rotation.py).
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def wh_ivfpq_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RETRAIN-ON-DRIFT — the action sim_ivfpq_drift's flag triggers,
@@ -1836,10 +1797,6 @@ def wh_ivfpq_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # answer — publish-on-base + append + compact must still equal the
     # frozen-structure batch encode, bit for bit.
     _sql_ivfpq_append(),
-    # Authored r11 (after the r11 flip); queued for r12, whose
-    # interrupted landing never flipped the rotation (VERDICT r12) —
-    # locally oracle-pinned at all three scales meanwhile.
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def wh_ivfpq_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-files COMPACTION on the live index layout — the standing
@@ -1965,10 +1922,6 @@ def _sql_pca_power(iterations: int = PCA_POWER_ITERATIONS) -> str:
 @query(
     "sim_pca_power",
     _sql_pca_power(),
-    # Authored r11 (after the r11 flip); queued for r12, whose
-    # interrupted landing never flipped the rotation (VERDICT r12) —
-    # locally oracle-pinned at all three scales meanwhile.
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def sim_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top PRINCIPAL COMPONENT of the embedding corpus by distributed
@@ -2086,11 +2039,6 @@ def _sql_pq256(
 @query(
     "sim_ann_pq256",
     _sql_pq256(),
-    # Authored r12 (sf0.01-verified then; re-verified at all three
-    # scales before the r13 flip). The r12 landing was interrupted
-    # before promotion/audit could be committed (VERDICT r12 "what's
-    # wrong" #2) — promoted r13 with the committed recall audit.
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def sim_ann_pq256(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k at the PRODUCTION PQ configuration (VERDICT
@@ -2126,10 +2074,6 @@ def sim_ann_pq256(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sim_ann_ivfpq256",
     _sql_ivfpq256(),
-    # Authored r13 AFTER the flip commit (the landing-checklist
-    # discipline): three-scale verified at authoring time, queued in
-    # NEXT_QUEUE for the r14 surface.
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def sim_ann_ivfpq256(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPLETE production retrieval stack (operators.similarity.
@@ -2173,10 +2117,6 @@ def sim_ann_ivfpq256(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size): the persisted 256-code index must answer exactly like the
     # in-memory one.
     _sql_ivfpq256(),
-    # Authored r13 AFTER the flip commit (the landing-checklist
-    # discipline): three-scale verified at authoring time, queued in
-    # NEXT_QUEUE for the r14 surface.
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def wh_ivfpq256_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PUBLISH-then-SERVE the production-sized IVF+PQ256 index
@@ -2230,10 +2170,6 @@ def wh_ivfpq256_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     # import (the r11 circular-import hazard); the streaming harness
     # itself lives in streaming/stream.py.
     _sql_ivfpq256(),
-    # Authored r13 AFTER the flip commit (the landing-checklist
-    # discipline): three-scale verified at authoring time, queued in
-    # NEXT_QUEUE for the r14 surface.
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def st_ivfpq256_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN queries SERVED AT INGEST from the STORED production index
@@ -2318,10 +2254,6 @@ def _sql_pq256_rotated(
 @query(
     "sim_ann_pq256_rotated",
     _sql_pq256_rotated(),
-    # Authored r13 AFTER the flip commit (the landing-checklist
-    # discipline): three-scale verified at authoring time, queued in
-    # NEXT_QUEUE for the r14 surface.
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def sim_ann_pq256_rotated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPQ-lite END TO END, Spark-native: the corpus is rotated by the
@@ -2368,9 +2300,6 @@ def _sql_opq256(
 @query(
     "sim_ann_opq256",
     _sql_opq256(),
-    # Authored r14 AFTER the flip commit (the landing-checklist
-    # discipline): queued in NEXT_QUEUE for the r15 surface.
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def sim_ann_opq256(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE OPQ, both halves (VERDICT r13 ask #2): the frozen rot64
@@ -2413,9 +2342,6 @@ def sim_ann_opq256(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sim_ann_opq256's oracle shared VERBATIM: stored == in-memory for
     # the full OPQ stack, rotation included.
     _sql_opq256(),
-    # Authored r14 AFTER the flip commit (the landing-checklist
-    # discipline): queued in NEXT_QUEUE for the r15 surface.
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def wh_opq256_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PUBLISH-then-SERVE the true-OPQ stack (sources.warehouse.
@@ -2471,9 +2397,6 @@ def wh_opq256_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _sql_opq256 and the shared OPQ artifacts; the streaming harness
     # lives in streaming/stream.py.
     _sql_opq256(),
-    # Authored r14 AFTER the flip commit (the landing-checklist
-    # discipline): queued in NEXT_QUEUE for the r15 surface.
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def st_opq256_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPQ queries SERVED AT INGEST from the STORED index
@@ -2523,9 +2446,6 @@ def st_opq256_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the base split only — the publish-on-base + append-new contract
     # at the production codebook size.
     _sql_ivfpq256(train_base=IVFPQ_APPEND_BASE),
-    # Authored r14 AFTER the flip commit (the landing-checklist
-    # discipline): queued in NEXT_QUEUE for the r15 surface.
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def wh_ivfpq256_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL maintenance at the PRODUCTION codebook size
@@ -2573,9 +2493,6 @@ def wh_ivfpq256_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wh_ivfpq256_append's oracle shared VERBATIM: compaction must
     # change NOTHING the serve path can see.
     _sql_ivfpq256(train_base=IVFPQ_APPEND_BASE),
-    # Authored r14 AFTER the flip commit (the landing-checklist
-    # discipline): queued in NEXT_QUEUE for the r15 surface.
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def wh_ivfpq256_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-files COMPACTION on the production-sized live layout —
@@ -2619,9 +2536,6 @@ def wh_ivfpq256_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trained quantizer): retraining the appended base-trained layout
     # must land EXACTLY on the fresh full-trained index.
     _sql_ivfpq256(),
-    # Authored r14 AFTER the flip commit (the landing-checklist
-    # discipline): queued in NEXT_QUEUE for the r15 surface.
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def wh_ivfpq256_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full RETRAIN at the production codebook size — the action
@@ -2800,11 +2714,6 @@ def _sql_pca_deflate(
 @query(
     "sim_pca_deflate",
     _sql_pca_deflate(),
-    # Authored r12 (sf0.01-verified then; re-verified at all three
-    # scales before the r13 flip). The r12 landing was interrupted
-    # before promotion could be committed (VERDICT r12 "what's wrong"
-    # #2) — promoted r13.
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def sim_pca_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 PRINCIPAL COMPONENTS by power iteration WITH DEFLATION

@@ -40,60 +40,24 @@ class NamedQuery:
     name: str
     spark: SparkQuery
     oracle: str | None  # ANSI SQL for DuckDB; None => rows-only check
-    driver: bool = True  # exposed through __spark_entry__? (see below)
 
 
 REGISTRY: dict[str, NamedQuery] = {}
 
 
-def query(name: str, oracle: str | None, driver: bool = True):
+def query(name: str, oracle: str | None):
     """Register a (spark_fn, oracle_sql) pair under ``name``.
 
-    ``driver=False`` keeps the entry fully registered (runnable, NLQ
-    routable, swept by tests/test_oracle_parity.py against its oracle)
-    but leaves it OUT of the driver-facing ``spark_queries()`` surface.
-    The external driver caps its per-round correctness sweep at 50
-    queries and samples beyond that, so the driver surface holds one
-    entry per operator family; strict-subset/sibling variants (e.g. the
-    1-iteration Lloyd next to the 3-iteration one, or the per-metric
-    text queries folded into tx_text_profile) are demoted to
-    locally-pinned status so every driver-facing query gets a
-    CORRECTNESS row every round.
-
-    ROTATION PROTOCOL (since r5): each round, a batch of locally-pinned
-    entries that have never had a driver CORRECTNESS row is swapped in
-    for siblings whose operator family already has multiple green rows,
-    so the whole registry accumulates driver-grade evidence over rounds
-    while the surface stays at exactly rotation.SURFACE_SIZE. The
-    per-round in/out ledger, the next-round queue, and the re-promotion
-    exceptions live in plans/rotation.py (rendered in ROTATION.md);
-    tests/test_rotation.py pins the ledger against the committed
-    CORRECTNESS_r{N}.json files.
+    Every entry is runnable, NLQ routable and swept against its oracle by
+    tests/test_oracle_parity.py; which entries the external driver sees
+    is computed by ``plans.rotation.driver_surface``.
     """
 
     def deco(fn: SparkQuery) -> SparkQuery:
-        REGISTRY[name] = NamedQuery(name, fn, oracle, driver)
+        REGISTRY[name] = NamedQuery(name, fn, oracle)
         return fn
 
     return deco
-
-
-def spark_queries() -> dict[str, SparkQuery]:
-    """Driver-facing surface: <= 50 entries, one per operator family."""
-    return {n: q.spark for n, q in REGISTRY.items() if q.driver}
-
-
-def oracle_queries() -> dict[str, str]:
-    return {
-        n: q.oracle
-        for n, q in REGISTRY.items()
-        if q.driver and q.oracle is not None
-    }
-
-
-def all_queries() -> dict[str, SparkQuery]:
-    """Full registry including locally-pinned (driver=False) variants."""
-    return {n: q.spark for n, q in REGISTRY.items()}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -135,7 +99,6 @@ def dsum_expr(expr, scale: int = 6):
     ORDER BY n DESC, segment ASC
     LIMIT 5
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def q1_top_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1 shape — 2-predicate filter -> group count -> top-5 with tie-break.
@@ -170,7 +133,6 @@ def q1_top_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n DESC, priority ASC
     LIMIT 5
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def q2_top_priorities_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2 shape — filter (type ∧ quarter) -> group count -> top-5.
@@ -200,7 +162,6 @@ def q2_top_priorities_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     ORDER BY n DESC, quarter ASC
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def q3_quarter_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3 shape — IN-list filter -> group by derived quarter label -> rank.
@@ -231,7 +192,6 @@ def q3_quarter_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(DISTINCT o_custkey) AS unique_customers
     FROM orders
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def a4_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KPI strip — one-pass conditional aggregation (A4 + A5 + F4).
@@ -263,7 +223,6 @@ def a4_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY quarter, status
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def a2_quarter_status_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-key group-by count (stacked-bar input).
@@ -290,7 +249,6 @@ def a2_quarter_status_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     ORDER BY priority
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def a6_distinct_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT projection, sorted — widget-population shape (A6/A7/O1).
@@ -327,7 +285,6 @@ def a6_distinct_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM totals t LEFT JOIN focus f ON t.qnum = f.qnum
     ORDER BY quarter
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def w1_quarter_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quarterly trend — two aggregates outer-joined, share-of-total, LAG QoQ.
@@ -379,11 +336,6 @@ def w1_quarter_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nation
     ORDER BY nation_id
     """,
-    # Demoted r5 (rotation, second wave): driver-green r1-r4 AND
-    # equivalence-tested against the parallel two-phase variant
-    # (tests/test_plan_quality.py); funds a22_brand_pagerank's first
-    # driver row so the iterative-algorithm tier sits under the gate.
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def w4_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordinal surrogate-key assignment over a dimension (W4/O1).
@@ -413,7 +365,6 @@ def w4_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN region ON n_regionkey = r_regionkey
     ORDER BY o_orderkey
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def j1_fact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact build — chained inner FK-resolution joins (J1/J2).
@@ -460,7 +411,6 @@ def j1_fact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN region r ON n.n_regionkey = r.r_regionkey
     ORDER BY o_orderkey
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def j3_gold_denorm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gold denormalization — star-join the fact back to all dims (J3).
@@ -511,7 +461,6 @@ def j3_gold_denorm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ORDER BY p_partkey
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def j5_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti-join — keys absent from the other side (J5/F3/X1): parts never
@@ -546,7 +495,6 @@ def j5_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY segment, status
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def j6_topk_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k semi-join — restrict detail rows to the top-k groups (J6 + O2).
@@ -589,9 +537,6 @@ def j6_topk_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) m ON n.n_name = m.old_name
     ORDER BY n_nationkey
     """,
-    # Demoted r5 (rotation: family already multiply driver-green; stays
-    # pinned by the local oracle sweep).
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def j7_name_remap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dict-lookup remap with pass-through fallback (J7/C4).
@@ -628,9 +573,6 @@ def j7_name_remap(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     ORDER BY n DESC, brand ASC
     """,
-    # Demoted r5 (rotation: family already multiply driver-green; stays
-    # pinned by the local oracle sweep).
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def f4_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring predicate -> group count (F4 + A1).
@@ -657,7 +599,6 @@ def f4_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n DESC, part_type ASC
     LIMIT 5
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def o2_top5_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k over a fact-dim join (O2 on the biggest table).
@@ -688,7 +629,6 @@ def o2_top5_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY segment_total DESC, segment ASC, status ASC
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def o4_group_total_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Groups ordered by their total — stacked-bar display order (O4/A3/W3).
@@ -721,7 +661,6 @@ def o4_group_total_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_custkey FROM orders WHERE o_orderstatus = 'P'
     ORDER BY c_custkey
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def x1_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set difference of key sets (X1) — high-balance customers with no
@@ -755,9 +694,6 @@ def x1_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_orderkey
     LIMIT 100
     """,
-    # Demoted r5 (rotation: family already multiply driver-green; stays
-    # pinned by the local oracle sweep).
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def c1_timestamp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dd/MM/yyyy HH:mm:ss parse + quarter labeling (C1-C3).
@@ -789,7 +725,6 @@ def c1_timestamp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY 1 ORDER BY segment
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def a1_count_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-key group-by count (A1) — the dashboard's most common shape.
@@ -818,9 +753,6 @@ def a1_count_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ROLLUP (r_name, n_name)
     ORDER BY lvl, region_name NULLS FIRST, nation_name NULLS FIRST
     """,
-    # Demoted r5 (rotation: family already multiply driver-green; stays
-    # pinned by the local oracle sweep).
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def a8_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP region -> nation -> grand total in ONE pass.
@@ -866,7 +798,6 @@ def a8_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY CUBE (o_orderstatus, 'Q' || CAST(quarter(o_orderdate) AS STRING))
     ORDER BY lvl, status NULLS FIRST, quarter NULLS FIRST
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def a9_cube_status_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (status, quarter): all four grouping sets in one pass
@@ -902,7 +833,6 @@ def a9_cube_status_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY 1 ORDER BY status
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def a10_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MIN/MAX/AVG/median per group — the aggregate family SURVEY.md
@@ -942,7 +872,6 @@ def a10_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY 1 ORDER BY status
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def a11_pivot_quarter_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT: quarters to columns (the dashboard-matrix orientation the
@@ -985,7 +914,6 @@ def a11_pivot_quarter_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY nation, part_type
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def a12_star_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SUM/AVG of fact MEASURES through a multi-dim star join — the
@@ -1038,7 +966,6 @@ def a12_star_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS sketch_in_bound
     FROM orders GROUP BY 1 ORDER BY status
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def a13_percentile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group value stats (MIN/MAX/decimal-exact AVG — a10_value_stats'
@@ -1104,7 +1031,6 @@ def a13_percentile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                             (o_orderstatus), (o_orderpriority), ())
     ORDER BY gid, status, priority
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def a14_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary GROUPING SETS: all four aggregation levels of
@@ -1155,7 +1081,6 @@ def a14_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT custkey FROM big_buyers UNION SELECT custkey FROM urgent_buyers)
     ORDER BY set_op
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def x2_union_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION (distinct) / INTERSECT / EXCEPT over key sets — the whole

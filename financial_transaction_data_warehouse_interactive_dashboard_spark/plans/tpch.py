@@ -88,7 +88,6 @@ SQL_DISC_PRICE = (
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1: the pricing summary report. One date-pushed scan, eight
@@ -145,8 +144,6 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, o_orderdate, l_orderkey
     LIMIT 10
     """,
-    # New r6 (locally pinned; r7 rotation candidate).
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3: top-10 highest-revenue unshipped BUILDING orders. The
@@ -207,7 +204,6 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o_orderdate < DATE '1997-01-01'
     GROUP BY n_name ORDER BY revenue DESC, n_name
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def tpch_q5_local_supplier_volume(
     spark: SparkSession, sf_dir: str
@@ -271,7 +267,6 @@ Q4_LATE_DAYS = 90
         AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
     GROUP BY 1 ORDER BY 1
     """,
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tpch_q4_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: orders with at least one LATE lineitem
@@ -317,7 +312,6 @@ def tpch_q4_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY supplier_cnt DESC, p_name, p_size
     """,
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tpch_q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: how many distinct suppliers can deliver each
@@ -377,7 +371,6 @@ def tpch_q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY supp_nation, cust_nation, l_year
     ORDER BY supp_nation, cust_nation, l_year
     """,
-    driver=True,  # first driver row r16 (promoted from NEXT_QUEUE; plans/rotation.py)
 )
 def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7: shipping volume between two geographies, by nation
@@ -473,7 +466,6 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) all_nations
     GROUP BY o_year ORDER BY o_year
     """,
-    driver=True,  # first driver row r16 (promoted from NEXT_QUEUE; plans/rotation.py)
 )
 def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8: NATION_1's share of AMERICA's PROMO-part order volume
@@ -561,7 +553,6 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY nation, o_year
     ORDER BY nation, o_year DESC
     """,
-    driver=True,  # first driver row r16 (promoted from NEXT_QUEUE; plans/rotation.py)
 )
 def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9: profit on a product line by supplier nation and year,
@@ -627,7 +618,6 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE 5 * pa.cnt * bl.qty < pa.sum_qty
     ORDER BY avg_yearly
     """,
-    driver=False,  # authored r16 post-flip; queued in NEXT_QUEUE for r17
 )
 def tpch_q17_small_qty_revenue(
     spark: SparkSession, sf_dir: str
@@ -715,7 +705,6 @@ def tpch_q17_small_qty_revenue(
     ORDER BY o_totalprice DESC, o_orderdate ASC, o_orderkey ASC
     LIMIT 100
     """,
-    driver=False,  # authored r16 post-flip; queued in NEXT_QUEUE for r17
 )
 def tpch_q18_large_volume_customer(
     spark: SparkSession, sf_dir: str
@@ -810,7 +799,6 @@ def tpch_q18_large_volume_customer(
     GROUP BY c_mktsegment
     ORDER BY c_mktsegment
     """,
-    driver=False,  # authored r16 post-flip; queued in NEXT_QUEUE for r17
 )
 def tpch_q22_dormant_rich_customers(
     spark: SparkSession, sf_dir: str
@@ -894,7 +882,6 @@ def tpch_q22_dormant_rich_customers(
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
-    driver=False,  # authored r16 (suite completion); queued for r17
 )
 def tpch_q6_forecast_revenue(
     spark: SparkSession, sf_dir: str
@@ -960,7 +947,6 @@ def tpch_q6_forecast_revenue(
     ORDER BY sum({SQL_DISC_PRICE}) DESC, c_custkey
     LIMIT 20
     """,
-    driver=False,  # authored r16 (suite completion); queued for r17
 )
 def tpch_q10_returned_items(
     spark: SparkSession, sf_dir: str
@@ -1028,7 +1014,6 @@ def tpch_q10_returned_items(
     GROUP BY l_returnflag
     ORDER BY l_returnflag
     """,
-    driver=False,  # authored r16 (suite completion); queued for r17
 )
 def tpch_q12_shipmode_priority(
     spark: SparkSession, sf_dir: str
@@ -1096,7 +1081,6 @@ def tpch_q12_shipmode_priority(
     GROUP BY c_count
     ORDER BY custdist DESC, c_count DESC
     """,
-    driver=False,  # authored r16 (suite completion); queued for r17
 )
 def tpch_q13_customer_distribution(
     spark: SparkSession, sf_dir: str
@@ -1152,7 +1136,6 @@ def tpch_q13_customer_distribution(
     WHERE l_shipdate >= TIMESTAMP '1996-09-01'
       AND l_shipdate < TIMESTAMP '1996-10-01'
     """,
-    driver=False,  # authored r16 (suite completion); queued for r17
 )
 def tpch_q14_promo_revenue(
     spark: SparkSession, sf_dir: str
@@ -1215,7 +1198,6 @@ def tpch_q14_promo_revenue(
     WHERE total_rev = (SELECT max(total_rev) FROM revenue)
     ORDER BY s_suppkey
     """,
-    driver=False,  # authored r16 (suite completion); queued for r17
 )
 def tpch_q15_top_supplier(
     spark: SparkSession, sf_dir: str
@@ -1284,7 +1266,6 @@ def tpch_q15_top_supplier(
        OR (p_brand = 'Brand#24' AND p_size BETWEEN 1 AND 15
            AND l_quantity BETWEEN 20 AND 30)
     """,
-    driver=False,  # authored r16 (suite completion); queued for r17
 )
 def tpch_q19_bracket_revenue(
     spark: SparkSession, sf_dir: str
@@ -1373,7 +1354,6 @@ def tpch_q19_bracket_revenue(
     ORDER BY s_acctbal DESC, s_name, p_partkey
     LIMIT 100
     """,
-    driver=False,  # authored r16 (suite completion); queued for r17
 )
 def tpch_q2_min_cost_supplier(
     spark: SparkSession, sf_dir: str
@@ -1478,7 +1458,6 @@ def tpch_q2_min_cost_supplier(
     WHERE value * n * 2 > 3 * total
     ORDER BY value DESC, l_partkey
     """,
-    driver=False,  # authored r16 (suite completion); queued for r17
 )
 def tpch_q11_important_stock(
     spark: SparkSession, sf_dir: str
@@ -1581,7 +1560,6 @@ def tpch_q11_important_stock(
       AND s_suppkey IN (SELECT l_suppkey FROM heavy)
     ORDER BY s_name
     """,
-    driver=False,  # authored r16 (suite completion); queued for r17
 )
 def tpch_q20_excess_stock_suppliers(
     spark: SparkSession, sf_dir: str
@@ -1686,7 +1664,6 @@ def tpch_q20_excess_stock_suppliers(
     ORDER BY numwait DESC, s_name
     LIMIT 100
     """,
-    driver=False,  # authored r16 (suite completion); queued for r17
 )
 def tpch_q21_waiting_suppliers(
     spark: SparkSession, sf_dir: str

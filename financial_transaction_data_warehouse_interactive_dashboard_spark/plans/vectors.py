@@ -109,8 +109,6 @@ def _cov_oracle() -> str:
 @query(
     "sim_embedding_covariance",
     _cov_oracle(),
-    # New r6 (locally pinned; r7 rotation candidate).
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
 )
 def sim_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population covariance of the leading 8x8 block of the embedding
@@ -200,8 +198,6 @@ def _rp_oracle() -> str:
 @query(
     "sim_random_projection",
     _rp_oracle(),
-    # New r6 (locally pinned; r7 rotation candidate).
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
 )
 def sim_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss Rademacher projection 64d -> 4d: each

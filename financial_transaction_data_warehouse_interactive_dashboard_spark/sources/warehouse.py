@@ -192,17 +192,20 @@ def _write_tables(spark: SparkSession, writes) -> None:
     full commit-protocol latency while the cluster idles — from a small
     thread pool the sidecar commits hide inside the codes job's tail.
     Thread-safety: different target tables, and Spark's scheduler is
-    explicitly designed for concurrent jobs from driver threads."""
+    explicitly designed for concurrent jobs from driver threads.
+
+    Every write runs to completion even when another fails; then one
+    error names every failing table, chained from the first failure."""
     from concurrent.futures import ThreadPoolExecutor
 
-    if len(writes) <= 1:
-        for _, thunk in writes:
-            thunk()
-        return
-    with ThreadPoolExecutor(max_workers=min(3, len(writes))) as pool:
-        futures = [pool.submit(thunk) for _, thunk in writes]
-        for f in futures:
-            f.result()
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futures = [(table, pool.submit(thunk)) for table, thunk in writes]
+    failed = [(t, f.exception()) for t, f in futures if f.exception()]
+    if failed:
+        detail = "; ".join(f"{t}: {type(e).__name__}: {e}" for t, e in failed)
+        raise RuntimeError(
+            f"{len(failed)} of {len(writes)} table writes failed: {detail}"
+        ) from failed[0][1]
 
 
 def write_ivf_layout(emb: DataFrame, table: str, n_cells: int = 16) -> None:

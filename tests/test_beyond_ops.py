@@ -443,6 +443,75 @@ def test_bpe_pass_budget_covers_fixture_corpora():
         assert not offenders, (sf_dir, offenders[:5])
 
 
+_BPE_STRAY_DOCS = [
+    "The CAT's 2nd caf\u00e9/bar \u2014 na\u00efve \u00dcBER-stable! tab\tend 42",
+    "",
+    "1",
+    "\u00e9a/",
+]
+
+
+@pytest.mark.parametrize("engine", ["spark", "duckdb"])
+def test_bpe_fast_path_domain_precondition(spark, engine):
+    """bpe_vocab_case_sql resolves a 1-char token as ascii(t) - 97, which
+    is exact only on [a-z]; the '[^a-z]+ -> space' pass in
+    bpe_token_ids_sql is what keeps every other 1-char token away from
+    it. On text full of digits, punctuation, accents and '/': every
+    token the pipeline emits is in the vocab and the fast lookup equals
+    the full-table CASE on it; with the pass removed, out-of-alphabet
+    1-char tokens reach the lookup and the two lookups disagree."""
+    from financial_transaction_data_warehouse_interactive_dashboard_spark.functions import (
+        text as T,
+    )
+
+    vocab = T.bpe_vocab()
+    fast = T.bpe_vocab_case_sql()
+    full = "CASE t " + " ".join(
+        f"WHEN '{s}' THEN {i}" for s, i in vocab.items()
+    ) + " ELSE -1 END"
+    pipeline = T.bpe_token_ids_sql(engine)
+    words = ", ".join(f"'{w}'" for w in vocab)
+    if engine == "spark":
+        spaced = "regexp_replace(lower(text), '[^a-z]+', ' ')"
+        probe = f"named_struct('tok', t, 'fast', {fast}, 'full', {full})"
+        whole_vocab = f"transform(array({words}), t -> {probe})"
+
+        def emitted(sql):
+            df = spark.createDataFrame([(d,) for d in _BPE_STRAY_DOCS], "text string")
+            return [tuple(r) for r in df.selectExpr(f"inline({sql})").collect()]
+    else:
+        spaced = "regexp_replace(lower(text), '[^a-z]+', ' ', 'g')"
+        probe = f"struct_pack(tok := t, fast := {fast}, full := {full})"
+        whole_vocab = f"list_transform([{words}], t -> {probe})"
+        con = duckdb.connect()
+
+        def emitted(sql):
+            return con.execute(
+                f"SELECT unnest(x, recursive := true) FROM (SELECT unnest({sql})"
+                " AS x FROM (SELECT unnest(?) AS text))",
+                [_BPE_STRAY_DOCS],
+            ).fetchall()
+
+    # The two lookups agree on every vocab symbol ...
+    lookups = emitted(whole_vocab)
+    assert {tok for tok, _, _ in lookups} == set(vocab)
+    assert all(f == g for _, f, g in lookups)
+    # ... and the pipeline emits nothing outside the vocab.
+    assert pipeline.count(f"t -> {fast}") == 1
+    pipeline = pipeline.replace(f"t -> {fast}", f"t -> {probe}")
+    tokens = emitted(pipeline)
+    assert tokens
+    stray = [tok for tok, _, _ in tokens if tok not in vocab]
+    assert not stray, stray
+
+    # Without the pass, out-of-alphabet 1-char tokens reach the lookup
+    # and the arithmetic path maps them to ids the full table never gives.
+    assert spaced in pipeline
+    mutant = emitted(pipeline.replace(spaced, "lower(text)"))
+    stray = [(tok, f, g) for tok, f, g in mutant if tok not in vocab]
+    assert stray and all(len(tok) == 1 and f != g == -1 for tok, f, g in stray)
+
+
 def test_bpe_pack_consumes_bpe_lengths(spark):
     """tx_bpe_pack's bins must be reproducible from tx_bpe_apply's
     n_tokens alone (the packing stage consumes the tokenizer's REAL

@@ -149,13 +149,12 @@ def _registry_plans(spark) -> dict[str, str]:
 
 
 def test_no_cartesian_product_in_registry(spark):
-    """No registry query — driver-facing OR locally-pinned — may plan an
-    unpartitioned CartesianProduct, the one join shape that cannot scale
-    (every deliberate small-side cross join in the codebase is broadcast,
-    which plans as BroadcastNestedLoopJoin with a 1-row/centroid side,
-    never CartesianProduct). Widened from driver-only in r5: local
-    entries are rotation candidates for the driver surface, so they meet
-    the same bar."""
+    """No registry query may plan an unpartitioned CartesianProduct, the
+    one join shape that cannot scale (every deliberate small-side cross
+    join in the codebase is broadcast, which plans as
+    BroadcastNestedLoopJoin with a 1-row/centroid side, never
+    CartesianProduct). Every entry can land on the computed driver
+    surface (plans/rotation.py), so every entry meets the same bar."""
     offenders = [
         name
         for name, plan in _registry_plans(spark).items()
@@ -674,6 +673,17 @@ def _rows_key(rows):
     return sorted(tuple(r) for r in rows)
 
 
+@pytest.fixture(scope="module")
+def raw_csvs(tmp_path_factory):
+    """Seeded FIXTURES.md section A dialect CSVs (BOM, ';' separator,
+    DIVIDENT, unlisted symbols, remapped countries): the ETL plan-shape
+    tests need the dialect, not the reference's own rows."""
+    from benchmark.gen import write_raw_csvs
+
+    paths = write_raw_csvs(str(tmp_path_factory.mktemp("raw")), 7, 2_281)
+    return paths["account"], paths["symbols"], paths["country"]
+
+
 @pytest.mark.parametrize(
     "name",
     ["a24_revenue_gini", "a16_rfm_segmentation", "a17_pareto_customers",
@@ -697,7 +707,7 @@ def test_scale_safe_plans_have_no_global_window(spark, name):
     _assert_no_global_window(REGISTRY[name].spark(spark, SF_SMOKE, scale_safe=True))
 
 
-def test_scale_safe_conf_knob_flips_all_sites(spark):
+def test_scale_safe_conf_knob_flips_all_sites(spark, raw_csvs):
     """VERDICT r6 ask #3: with spark.graft.scaleSafe.rowThreshold set,
     every former global-window site flips to the two-phase path
     AUTOMATICALLY — no caller flag — and none of their plans contain an
@@ -724,11 +734,9 @@ def test_scale_safe_conf_knob_flips_all_sites(spark):
         etl as E,
     )
 
-    from test_etl_golden import ACCOUNT, COUNTRY, SYMBOLS
-
     spark.conf.set(SCALE_SAFE_CONF, "0")
     try:
-        account, symbols, _ = E.read_raw(spark, ACCOUNT, SYMBOLS, COUNTRY)
+        account, symbols, _ = E.read_raw(spark, *raw_csvs)
         acc = E.clean_account(account, symbols)
         sym = E.remap_country(symbols, spark)
         for dim in E.build_dims(acc, sym, spark):
@@ -833,16 +841,14 @@ def test_gini_scale_safe_driver_entry_audit(spark):
         assert r[c] == b[c]
 
 
-def test_build_dims_scale_safe_equivalence(spark):
+def test_build_dims_scale_safe_equivalence(spark, raw_csvs):
     """plans.etl.build_dims both modes: identical surrogate ids on every
     dim, and no unpartitioned window in the scale_safe dim plans."""
     from financial_transaction_data_warehouse_interactive_dashboard_spark.plans import (
         etl as E,
     )
 
-    from test_etl_golden import ACCOUNT, COUNTRY, SYMBOLS
-
-    account, symbols, _ = E.read_raw(spark, ACCOUNT, SYMBOLS, COUNTRY)
+    account, symbols, _ = E.read_raw(spark, *raw_csvs)
     acc = E.clean_account(account, symbols)
     sym = E.remap_country(symbols, spark)
     dims = E.build_dims(acc, sym, spark)

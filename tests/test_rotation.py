@@ -1,9 +1,7 @@
-"""Rotation-ledger integrity (VERDICT r6 ask #8): the driver surface and
-the structured history in plans/rotation.py must agree with the
-committed CORRECTNESS_r{N}.json evidence — every driver=True entry is
-either historically driver-green or a declared first-timer this round,
-no stale names survive in the ledger, and the surface stays at exactly
-SURFACE_SIZE entries."""
+"""Driver surface policy (plans/rotation.py): unit tests of
+``driver_surface`` on synthetic evidence, and its guarantee on the
+committed CORRECTNESS_r{N}.json files — exactly SURFACE_SIZE registered
+entries, each green in some committed round or never driver-checked."""
 
 from __future__ import annotations
 
@@ -13,118 +11,112 @@ import os
 
 from financial_transaction_data_warehouse_interactive_dashboard_spark.plans import (
     queries as Q,
-)
-from financial_transaction_data_warehouse_interactive_dashboard_spark.plans import (
     rotation as R,
 )
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _row_green(row) -> bool:
-    return bool(
-        isinstance(row, dict)
-        and row.get("rows_match")
-        and row.get("schema_match")
-        and row.get("hash_match")
-        and not row.get("err")
-    )
+def _write(d, rnd: int, rows: dict[str, bool], err: str | None = None) -> None:
+    """One synthetic evidence file: name -> all three matches true?"""
+    body = {
+        n: {"rows_match": ok, "schema_match": True, "hash_match": ok, "err": err}
+        for n, ok in rows.items()
+    }
+    (d / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(body))
 
 
-def _driver_green() -> set[str]:
-    """Names with at least one PASSING committed driver row. A failed
-    row (hash/rows/schema false or err set — e.g. qa_wilson_ci r7) must
-    not let an entry be demoted as if verified (ADVICE r7)."""
-    seen: set[str] = set()
+def test_never_checked_names_come_first(tmp_path):
+    _write(tmp_path, 1, {"a": True, "b": True})
+    assert R.driver_surface(["b", "d", "a", "c"], tmp_path) == ["c", "d", "a", "b"]
+
+
+def test_red_only_rows_count_as_never_green(tmp_path):
+    _write(tmp_path, 1, {"a": False, "b": True})
+    _write(tmp_path, 2, {"c": True}, err="boom")
+    assert R.driver_surface(["a", "b", "c"], tmp_path) == ["a", "c", "b"]
+
+
+def test_green_names_ordered_by_latest_green_round_then_name(tmp_path):
+    _write(tmp_path, 1, {"a": True, "b": True, "c": True, "d": True})
+    _write(tmp_path, 2, {"c": True, "a": True})
+    _write(tmp_path, 3, {"b": True})
+    _write(tmp_path, 4, {"d": False})  # a later red row does not refresh d
+    assert R.driver_surface(["a", "b", "c", "d"], tmp_path) == ["d", "a", "c", "b"]
+
+
+def test_no_evidence_gives_first_names_by_name(tmp_path):
+    names = [f"n{i:03d}" for i in range(R.SURFACE_SIZE + 10)][::-1]
+    expected = sorted(names)[: R.SURFACE_SIZE]
+    assert R.driver_surface(names, tmp_path) == expected
+    assert R.driver_surface(names, tmp_path / "missing") == expected
+
+
+def test_result_does_not_depend_on_glob_order(tmp_path, monkeypatch):
+    _write(tmp_path, 1, {"a": True, "b": True, "c": True})
+    _write(tmp_path, 2, {"b": True})
+    _write(tmp_path, 3, {"a": True, "c": False})
+    names, orig = ["a", "b", "c", "d"], glob.glob
+    monkeypatch.setattr(R.glob, "glob", lambda p: sorted(orig(p)))
+    forward = R.driver_surface(names, tmp_path)
+    monkeypatch.setattr(R.glob, "glob", lambda p: sorted(orig(p), reverse=True))
+    assert R.driver_surface(names, tmp_path) == forward == ["d", "c", "b", "a"]
+
+
+def _committed() -> tuple[set[str], dict[str, int]]:
+    """(names with any committed row, name -> latest green round)."""
+    checked: set[str] = set()
+    last_green: dict[str, int] = {}
     for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        rnd = int(os.path.basename(path)[len("CORRECTNESS_r") : -len(".json")])
         for name, row in json.load(open(path)).items():
-            if _row_green(row):
-                seen.add(name)
-    return seen
+            checked.add(name)
+            if R.row_green(row):
+                last_green[name] = max(last_green.get(name, 0), rnd)
+    return checked, last_green
 
 
-def _driver_checked() -> set[str]:
-    """Names that have ANY committed driver row, pass or fail — the raw
-    'has been on the surface' semantics the first-timer/queue checks
-    need (a failed attempt still used up the entry's first-timer slot)."""
-    seen: set[str] = set()
-    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        seen.update(json.load(open(path)))
-    return seen
+SURFACE = R.driver_surface(Q.REGISTRY, REPO)
+CHECKED, LAST_GREEN = _committed()
 
 
 def test_surface_is_exactly_surface_size():
-    surface = {n for n, q in Q.REGISTRY.items() if q.driver}
-    assert len(surface) == R.SURFACE_SIZE
-
-
-def test_every_ledger_name_is_registered():
-    names = set(Q.REGISTRY)
-    for rnd, swap in R.ROTATION_HISTORY.items():
-        for key in ("in", "out"):
-            missing = set(swap[key]) - names
-            assert not missing, (rnd, key, missing)
-    assert not set(R.NEXT_QUEUE) - names
+    assert len(SURFACE) == len(set(SURFACE)) == R.SURFACE_SIZE
+    assert set(SURFACE) <= set(Q.REGISTRY)
 
 
 def test_driver_entries_are_green_or_declared_first_timers():
-    """The ask's exact contract: every driver=True entry either has a
-    CORRECTNESS row in some committed round or is listed as a
-    first-timer ('in') for CURRENT_ROUND."""
-    surface = {n for n, q in Q.REGISTRY.items() if q.driver}
-    green = _driver_green()
-    first_timers = set(R.ROTATION_HISTORY[R.CURRENT_ROUND]["in"])
-    unexplained = surface - green - first_timers
+    """Every surface entry is green in some committed round or has never
+    been driver-checked (a first-timer)."""
+    unexplained = set(SURFACE) - set(LAST_GREEN) - (set(Q.REGISTRY) - CHECKED)
     assert not unexplained, unexplained
 
 
 def test_first_timers_are_actually_new_and_in_surface():
-    """Promotions must be genuine first-timers (no prior driver row at
-    promotion time — rows from CURRENT_ROUND onward are the rotation
-    paying off, not a violation) and must be driver=True now."""
-    surface = {n for n, q in Q.REGISTRY.items() if q.driver}
-    for rnd, swap in R.ROTATION_HISTORY.items():
-        prior: set[str] = set()
-        for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-            n = int(os.path.basename(path)[len("CORRECTNESS_r"):-len(".json")])
-            if n < rnd:
-                prior.update(json.load(open(path)))
-        stale = {
-            n
-            for n in set(swap["in"]) & prior
-            if R.RE_PROMOTED.get(n) != rnd
-        }
-        assert not stale, (rnd, stale)
-    assert set(R.ROTATION_HISTORY[R.CURRENT_ROUND]["in"]) <= surface
-    assert not set(R.ROTATION_HISTORY[R.CURRENT_ROUND]["out"]) & surface
-
-
-def test_next_queue_is_never_driver_checked():
-    checked = _driver_checked()
-    current_in = set(R.ROTATION_HISTORY[R.CURRENT_ROUND]["in"])
-    stale = set(R.NEXT_QUEUE) & (checked | current_in)
-    assert not stale, stale
+    """Every registered entry without a committed row is on the surface
+    while they fit."""
+    never = set(Q.REGISTRY) - CHECKED
+    if len(never) <= R.SURFACE_SIZE:
+        assert never <= set(SURFACE), never - set(SURFACE)
 
 
 def test_refresh_queue_is_age_ordered_and_green():
-    """Steady-state freshness policy (r9, VERDICT r8 ask #4): the
-    refresh queue holds only entries with a committed GREEN driver row
-    (re-earning freshness is its point — first-timers belong in
-    NEXT_QUEUE), none currently on the surface, ordered by oldest
-    most-recent-green-row first (ties by name)."""
-    assert not set(R.REFRESH_QUEUE) - set(Q.REGISTRY)
-    surface = {n for n, q in Q.REGISTRY.items() if q.driver}
-    assert not set(R.REFRESH_QUEUE) & surface
-    last_green: dict[str, int] = {}
-    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        rnd = int(os.path.basename(path)[len("CORRECTNESS_r"):-len(".json")])
-        for name, row in json.load(open(path)).items():
-            if _row_green(row):
-                last_green[name] = max(last_green.get(name, 0), rnd)
-    missing = [n for n in R.REFRESH_QUEUE if n not in last_green]
-    assert not missing, missing
-    keys = [(last_green[n], n) for n in R.REFRESH_QUEUE]
-    assert keys == sorted(keys), "refresh queue must be age-ordered"
+    """The surface entries that hold a green row come in (latest green
+    round, name) order, and no green entry left off the surface has an
+    older latest green round than one on it."""
+    keys = [(LAST_GREEN[n], n) for n in SURFACE if n in LAST_GREEN]
+    assert keys == sorted(keys)
+    off = [LAST_GREEN[n] for n in set(Q.REGISTRY) - set(SURFACE) if n in LAST_GREEN]
+    assert not keys or not off or keys[-1][0] <= min(off)
+
+
+def test_driver_adapter_serves_the_surface():
+    import __spark_entry__ as E
+
+    assert set(E.queries()) == set(SURFACE)
+    assert set(E.oracle_sql()) == {
+        n for n in SURFACE if Q.REGISTRY[n].oracle is not None
+    }
 
 
 def test_survey_2_11_inventory_matches_registry():
@@ -141,51 +133,6 @@ def test_survey_2_11_inventory_matches_registry():
     registry = set(Q.REGISTRY)
     assert table_names - registry == set(), table_names - registry
     assert registry - table_names == set(), registry - table_names
-
-
-def test_rotation_md_mentions_current_round():
-    text = open(os.path.join(REPO, "ROTATION.md")).read()
-    assert f"| {R.CURRENT_ROUND} |" in text
-    for name in R.ROTATION_HISTORY[R.CURRENT_ROUND]["in"]:
-        assert name in text, name
-
-
-def test_keep_set_capped_and_on_surface():
-    """Keep-set cap policy (r13; VERDICT r11 ask #8 / r12 ask #6): the
-    keep-set is an explicit pinned tuple, capped at KEEP_SET_CAP so
-    refresh throughput cannot quietly degrade, every member is on the
-    current surface (it re-earns a row every round — that is its
-    definition), every member is registered, no duplicates, and members
-    are scale/state-dependent shapes (st_*/wh_* harnesses plus the
-    a24 plan-shape claim)."""
-    keep = R.KEEP_SET
-    assert len(keep) == len(set(keep)), "duplicate keep-set member"
-    assert len(keep) <= R.KEEP_SET_CAP, (len(keep), R.KEEP_SET_CAP)
-    assert not set(keep) - set(Q.REGISTRY), set(keep) - set(Q.REGISTRY)
-    surface = {n for n, q in Q.REGISTRY.items() if q.driver}
-    off_surface = set(keep) - surface
-    assert not off_surface, off_surface
-    for name in keep:
-        assert name.startswith(("st_", "wh_")) or name == (
-            "a24_revenue_gini_scale_safe"
-        ), name
-    # The surface decomposes exactly: first-timers + keep-set + refresh
-    # (refresh = surface members that are neither — they must all come
-    # from the refresh pool, i.e. hold a prior green row; the
-    # green-or-first-timer test above already pins that).
-    first = set(R.ROTATION_HISTORY[R.CURRENT_ROUND]["in"])
-    # A first-timer may sit in the keep-set ONLY if the admissions
-    # ledger declares it admitted THIS round (the r14
-    # wh_ivfpq256_publish case: it takes its family's seat the same
-    # round it earns its first row — cap policy, plans/rotation.py).
-    admitted_now = {
-        n for n, rnd in R.KEEP_SET_ADMISSIONS.items()
-        if rnd == R.CURRENT_ROUND
-    }
-    assert not (first & set(keep)) - admitted_now, (
-        (first & set(keep)) - admitted_now
-    )
-    assert admitted_now <= set(keep), admitted_now - set(keep)
 
 
 def test_tpch_suite_complete():

@@ -4,7 +4,9 @@ partitioned tables prune partitions at the scan."""
 from __future__ import annotations
 
 import re
+import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from financial_transaction_data_warehouse_interactive_dashboard_spark.sources import (
@@ -644,3 +646,34 @@ def test_ivfpq256_append_leaves_base_partitions_untouched(spark):
     )
     assert appended.count() > 0
     assert appended.select("m").distinct().count() == 8
+
+
+def test_write_tables_names_every_failing_table():
+    """Concurrent publish writes: a failure does not cut the other writes
+    short, and the one error raised names every failing table, chained
+    from the first failure."""
+    done = []
+
+    def fail(msg):
+        def thunk():
+            raise ValueError(msg)
+
+        return thunk
+
+    def slow_ok():
+        time.sleep(0.2)
+        done.append("centroids")
+
+    with pytest.raises(RuntimeError) as info:
+        WH._write_tables(
+            None,
+            [("codes", fail("disk full")), ("centroids", slow_ok),
+             ("books", fail("schema drift"))],
+        )
+    msg = str(info.value)
+    assert "codes: ValueError: disk full" in msg
+    assert "books: ValueError: schema drift" in msg
+    assert "centroids" not in msg
+    assert isinstance(info.value.__cause__, ValueError)
+    assert str(info.value.__cause__) == "disk full"
+    assert done == ["centroids"]

@@ -1,9 +1,9 @@
 """Fresh-process, driver-style full-registry sweep at an arbitrary
-scale — the flip-validation step of the LANDING CHECKLIST
-(plans/rotation.py): every rotation promotion must be verified
-bit-exact against its DuckDB oracle at sf0.001 / sf0.01 / sf0.1 BEFORE
-the driver-flag flip is committed. Earlier rounds ran this inline; the
-committed tool makes the recipe reproducible.
+scale. Pre-clearing the driver surface means sweeping the names
+``plans.rotation.driver_surface`` will return (bit-exact against their
+DuckDB oracles at sf0.001 / sf0.01 / sf0.1) before the next driver run;
+the surface itself is computed from the committed CORRECTNESS_r*.json
+files, so there is no flag to flip.
 
 Usage:  python tools/sweep.py [sf_dir] [name ...]
 
