@@ -791,7 +791,9 @@ def main() -> None:
     ):
         cost = len(json.dumps({n: timings[n]})) + 1
         if budget - cost < 0:
-            break
+            # continue, not break: a long name that does not fit must not
+            # hide the cheaper entries after it whose shorter names do.
+            continue
         out["queries"][n] = timings[n]
         budget -= cost
 

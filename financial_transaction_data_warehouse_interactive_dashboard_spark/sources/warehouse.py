@@ -183,14 +183,24 @@ def upsert_partition_overwrite(
 
 
 
-def _write_tables(spark: SparkSession, writes) -> None:
+def _write_tables(writes) -> None:
     """Run independent table writes CONCURRENTLY (guide section 2.6 —
     overlap independent jobs): each item is (table, thunk) where the
-    thunk performs the drop+saveAsTable for its own table. The publish
-    lifecycles write 2-3 INDEPENDENT tables (a big codes table plus
-    broadcast-sized sidecars); sequentially, each tiny sidecar pays its
-    full commit-protocol latency while the cluster idles — from a small
-    thread pool the sidecar commits hide inside the codes job's tail.
+    thunk performs the whole write of its own table. Two kinds of caller:
+
+    - the publish lifecycles write 2-3 INDEPENDENT tables (a big codes
+      table plus broadcast-sized sidecars); sequentially, each tiny
+      sidecar pays its full commit-protocol latency while the cluster
+      idles — from a small thread pool the sidecar commits hide inside
+      the codes job's tail;
+    - plans.etl.write_warehouse writes the six star/gold tables of one
+      refresh, gold and fact first, over shared cached intermediates.
+
+    Three workers suffice: the two big writes keep the cores busy and the
+    third worker drains the small ones behind them. On the ETL refresh
+    (200k account rows, 4 vCPU) 3 workers took 4.09 s and a 6-thread pool
+    4.07 s; a second, 8-round interleaved A/B read medians of 2.53 s and
+    2.40 s, inside the 0.32 s spread between the 3-worker rounds.
     Thread-safety: different target tables, and Spark's scheduler is
     explicitly designed for concurrent jobs from driver threads.
 
@@ -280,7 +290,6 @@ def publish_ivfpq_layout(
         )
 
     _write_tables(
-        emb.sparkSession,
         [("codes", _w_codes), ("centroids", _w_cells), ("books", _w_books)],
     )
 
@@ -338,7 +347,6 @@ def publish_ivfpq256_layout(
         ).saveAsTable(f"{prefix}_books")
 
     _write_tables(
-        spark,
         [("codes", _w_codes), ("centroids", _w_cells), ("books", _w_books)],
     )
 
@@ -483,7 +491,7 @@ def publish_opq256_layout(
         )
 
     _write_tables(
-        spark, [("rot", _w_rot), ("books", _w_books), ("codes", _w_codes)]
+        [("rot", _w_rot), ("books", _w_books), ("codes", _w_codes)]
     )
 
 

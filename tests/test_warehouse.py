@@ -666,7 +666,6 @@ def test_write_tables_names_every_failing_table():
 
     with pytest.raises(RuntimeError) as info:
         WH._write_tables(
-            None,
             [("codes", fail("disk full")), ("centroids", slow_ok),
              ("books", fail("schema drift"))],
         )
